@@ -33,6 +33,7 @@ ROOT = os.path.dirname(HERE)
 SETUP_REPS = 3
 MIN_PASSES = 3
 TRACE_REPS = 2
+TRACE_WARM_PASSES = 2  # the traced run compares passes with each other: warm further
 
 
 def declared_metrics() -> dict:
@@ -145,7 +146,8 @@ class Run:
         spark, _ = self.start(self.threads)
         stats = SparkStats(spark)
         self.stage(spark)
-        self.one_pass(spark, "warm")
+        for i in range(TRACE_WARM_PASSES):
+            self.one_pass(spark, f"warm{i}")
         walls, outputs, per_pass, layers = [], [], [], []
 
         def untraced(pass_id: str) -> None:

@@ -240,6 +240,8 @@ class PageWorkload(Workload):
     def trace_results(self, spark, tracer: Tracer, pass_id: str, prev: float):
         """(metrics, checkpoint-pass seconds): results and checkpoint
         self-times on top of the extraction prefix that took ``prev``."""
+        from pyspark.sql import functions as F
+
         m: Dict[str, float] = {}
         ex = self.extracted(self.pages(spark)).persist()
         try:
@@ -247,6 +249,8 @@ class PageWorkload(Workload):
                 res = self.results(ex)
                 noop(res)
             m["results.plan_chars"] = len(res._jdf.queryExecution().optimizedPlan().toString())
+            row = ex.agg(F.sum("n_nodes").alias("n"), F.sum("n_content_nodes").alias("c")).collect()[0]
+            m["blocks.content_frac"] = row["c"] / max(1, row["n"])
         finally:
             ex.unpersist()
         t_res = sp["end"] - sp["start"]
@@ -310,11 +314,10 @@ class CrawlExtract(PageWorkload):
         prev = m.pop("_prefix_s")
         mark = stats.mark()
         with tracer.span("pipeline.sink_s", parent="traced", pass_id=pass_id) as sp:
-            row = self.sink(self.extracted(self.pages(spark)))
+            self.sink(self.extracted(self.pages(spark)))
         m["pipeline.task_skew"] = stats.task_skew(stats.jobs_since(mark))
         m["trace.self_sum_s"] = sp["end"] - sp["start"]
         m["pipeline.sink_s"] = sp["self_s"] = m["trace.self_sum_s"] - prev
-        m["blocks.content_frac"] = row["content_nodes"] / max(1, row["nodes"])
         return m
 
     def trace_extra(self, spark, tracer) -> Dict[str, float]:
