@@ -169,13 +169,16 @@ def near_dup_docs(seed: int, n: int) -> List[Dict]:
     shared templates plus a short unique tail."""
     sources = pick_sources(seed, n)
     rng = random.Random(seed * 7919 + 1)
-    templated = set(rng.sample(range(n), int(n * TEMPLATE_SHARE)))
+    # the seed picks which docs are templated; every template gets an equal
+    # share of them, so the skewed buckets are the same size for every seed
+    templated = sorted(rng.sample(range(n), int(n * TEMPLATE_SHARE)))
+    template_of = {i: k % NUM_TEMPLATES for k, i in enumerate(templated)}
     templates = _templates()
     rows = []
     for i, s in enumerate(sources):
-        if i in templated:
+        if i in template_of:
             tail = source_text(s).split(" ")[:3]
-            text = templates[s % NUM_TEMPLATES] + " " + " ".join(tail)
+            text = templates[template_of[i]] + " " + " ".join(tail)
         else:
             text = source_text(s)
         rows.append(
@@ -209,7 +212,7 @@ def embeddings(seed: int, n: int, clusters: int = 32) -> Dict[int, np.ndarray]:
     ids = pick_sources(seed + 1, n)
     rng = np.random.default_rng(seed)
     centers = rng.normal(size=(clusters, EMB_DIM))
-    labels = rng.integers(0, clusters, size=n)
+    labels = rng.permutation(np.arange(n) % clusters)  # equal-sized clusters for every seed
     vecs = centers[labels] + rng.normal(scale=0.6, size=(n, EMB_DIM))
     vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
     out = {}
