@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..pycore.normalize import (
     AMOUNT_CONFUSION_DST,
     AMOUNT_CONFUSION_SRC,
+    CTRL_CLASS,
     ERA_BASE,
     FULLWIDTH_ALNUM,
     FULLWIDTH_DIGITS,
@@ -144,7 +145,7 @@ def clean_text(col: Column) -> Column:
 
     Same step order as pycore.normalize.clean_text.
     """
-    c = F.regexp_replace(col, "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]", "")
+    c = F.regexp_replace(col, CTRL_CLASS, "")
     c = F.regexp_replace(c, "\r\n", "\n")
     c = F.regexp_replace(c, "\r", "\n")
     c = F.regexp_replace(c, "[ \t]+", " ")

@@ -1,7 +1,12 @@
 """Content-block selection + main-text assembly as native Spark SQL.
 
 Relational mirror of pycore.blocks (integer-only rule — exact agreement).
-Two equivalent formulations are provided:
+Production (`plans.pipeline.extract_pages`) runs pycore.blocks itself inside
+the tokenizer's Arrow pass (`operators.tokenize.extract_fused`); these
+formulations stay as node-level library operators and as the SQL side of
+the parity tests.  ``extract_text_packed`` works on one packed row per
+document with no shuffle; two equivalent node-stream formulations are
+also provided:
 
 1. ``extract_text`` (default, the scale path): ONE hash aggregation per url
    collects the (tiny, ~16-element) node array, then the seed/smoothing rule
@@ -27,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import clean_text
 from ..pycore import blocks as pyblocks
+from ..pycore.normalize import CTRL_CLASS
 
 _BOILER = sorted(pyblocks.BOILER_CLASSES | pyblocks.NON_BODY)
 _TEXT_TAGS = sorted(pyblocks.TEXT_TAGS)
@@ -44,12 +50,12 @@ _NODE_FIELDS = ["node_id", "tag_class", "text", "n_chars", "n_link_chars", "n_wo
 # rewrite passes + btrim for the ~100% of real documents with no
 # control bytes; documents that do contain one take the full chain, so
 # output is byte-identical either way (pinned by test_blocks_parity /
-# e2e byte identity, including control-char fixtures).
-_CTRL_CLASS = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]"
+# e2e byte identity, including control-char fixtures).  The fused Arrow
+# pass (operators/tokenize.py) applies the same gate with the same class.
 
 
 def _clean_collapsed(raw: Column) -> Column:
-    return F.when(raw.rlike(_CTRL_CLASS), clean_text(raw)).otherwise(raw)
+    return F.when(raw.rlike(CTRL_CLASS), clean_text(raw)).otherwise(raw)
 
 
 def _seed_of(x) -> Column:
@@ -156,7 +162,7 @@ def extract_text(nodes: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# formulation 0: packed documents (the production path) — zero shuffles
+# formulation 0: packed documents — zero shuffles
 # ---------------------------------------------------------------------------
 
 

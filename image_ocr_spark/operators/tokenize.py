@@ -1,4 +1,7 @@
-"""Tokenizer operator: pages DataFrame -> nodes DataFrame via mapInArrow.
+"""Tokenizer operator: pages DataFrame -> nodes / extraction rows via
+mapInArrow.  ``extract_fused`` (tokenize + content selection + classify in
+the same pass) is what ``plans.pipeline.extract_pages`` runs; ``tokenize``
+and ``tokenize_packed`` expose the node stream to node-level operators.
 
 The engine's single JVM->Python boundary (SURVEY.md §2.10 X1 — the graft of
 BaseOCREngine.recognize, `engines/base.py:178-204`).  The format branch
@@ -28,12 +31,16 @@ Scale notes:
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from ..pycore.htmltok import scan_html_cols, tokenize_html
+from ..pycore.blocks import select_content
+from ..pycore.classify import classify_doc
+from ..pycore.htmltok import page_title, scan_html_cols, tokenize_html
+from ..pycore.normalize import CTRL_CLASS, clean_text
 from ..pycore.pdftok import is_pdf, tokenize_pdf
 from ..schemas import NODE_SCHEMA
 
@@ -114,9 +121,9 @@ def _run_engine(raw, engine: str):
     return "none", [_SENTINEL]
 
 
-def _pdf_cols(nodes):
-    """tokenize_pdf node dicts -> the flat-column tuple scan_html_cols
-    produces (PDF is ~10% of a crawl mix, so the dict hop is cheap here)."""
+def _node_cols(nodes):
+    """Node dicts -> the flat-column tuple scan_html_cols produces (PDF is
+    ~10% of a crawl mix, so the dict hop is cheap there)."""
     return (
         [n["tag_class"] for n in nodes],
         [n["text"] for n in nodes],
@@ -129,10 +136,13 @@ def _pdf_cols(nodes):
 # sentinel in column form: node_id [-1], matching _SENTINEL exactly
 _SENT_COLS = ([-1], ["empty"], [""], [0], [0], [0])
 
-# cols-producing engine registry, same keys/order as ENGINES
+# cols-producing engine registry, derived from ENGINES (same keys, same
+# fallback order) so an engine registered there cannot be skipped here:
+# html has a native column scanner, any other engine adapts its node dicts
+_COLS_SCANNERS = {"html": scan_html_cols}
 _ENGINES_COLS = {
-    "html": scan_html_cols,
-    "pdf": lambda raw: _pdf_cols(tokenize_pdf(raw)),
+    name: _COLS_SCANNERS.get(name) or (lambda raw, fn=fn: _node_cols(fn(raw)))
+    for name, fn in ENGINES.items()
 }
 
 
@@ -266,6 +276,24 @@ PACKED_DDL = (
 )
 
 
+def _split_pages(batch: pa.RecordBatch):
+    """(url, doc_id, html list) of a pages batch.  url/doc_id are 1:1 with
+    output rows, so their Arrow columns pass through zero-copy (r07); only
+    html crosses into Python objects.  A missing doc_id reads as null."""
+    names = batch.schema.names
+    url_col = batch.column(names.index("url"))
+    if url_col.type != pa.string():
+        url_col = url_col.cast(pa.string())
+    htmls = batch.column(names.index("html")).to_pylist()
+    if "doc_id" in names:
+        doc_col = batch.column(names.index("doc_id"))
+        if doc_col.type != pa.int64():
+            doc_col = doc_col.cast(pa.int64())
+    else:
+        doc_col = pa.nulls(len(htmls), pa.int64())
+    return url_col, doc_col, htmls
+
+
 def _tokenize_packed(
     batches: Iterator[pa.RecordBatch], engine: str = "auto"
 ) -> Iterator[pa.RecordBatch]:
@@ -274,19 +302,7 @@ def _tokenize_packed(
     # pa.array() on a list-of-dicts hits pyarrow's per-element inference
     # path and was measured at ~2x the cost of the tokenizer itself.
     for batch in batches:
-        names = batch.schema.names
-        # url/doc_id are 1:1 with output rows: pass the Arrow columns
-        # through zero-copy (r07) — only html crosses into Python objects
-        url_col = batch.column(names.index("url"))
-        if url_col.type != pa.string():
-            url_col = url_col.cast(pa.string())
-        htmls = batch.column(names.index("html")).to_pylist()
-        if "doc_id" in names:
-            doc_col = batch.column(names.index("doc_id"))
-            if doc_col.type != pa.int64():
-                doc_col = doc_col.cast(pa.int64())
-        else:
-            doc_col = pa.nulls(len(htmls), pa.int64())
+        url_col, doc_col, htmls = _split_pages(batch)
         engines: list = []
         offsets: list = [0]
         f_nid: list = []
@@ -337,21 +353,26 @@ def tokenize_packed(pages: DataFrame, engine: str = "auto") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fused variant: tokenize + content selection + classify in ONE Python pass,
-# emitting only the final per-document row (no node structs cross Arrow).
-# The rollup logic is pycore.blocks/classify — the SAME code the byte-
-# identity oracle runs, and tests/test_blocks_parity.py proves it equals
-# the SQL rollup bit-for-bit (every column, every page kind).
+# fused pass (the production extract_pages path): tokenize + content
+# selection + title + classify in ONE Python pass, emitting only the final
+# per-document row (no node structs cross Arrow).  The rollup logic is
+# pycore.blocks/classify — the SAME code the byte-identity oracle runs, and
+# tests/test_blocks_parity.py pins it row-for-row against the SQL
+# composition classify_df(extract_text_packed(tokenize_packed(...))).
 #
-# MEASURED OUTCOME (r3): fused is ~20-30% SLOWER than packed+SQL rollup at
-# 16 cores despite skipping the node-array Arrow transfer.  Reason: the
-# SQL rollup executes in the SAME pipelined stage as the tokenizer — JVM
-# threads consume node batches while the Python workers produce the next
-# ones, so its ~2.5s of expression work hides behind the Python boundary;
-# fusing moves that work onto the Python critical path (all 16 cores are
-# already tokenize-bound).  Kept because the trade flips when the cluster
-# is transfer-bound rather than CPU-bound (remote shuffle, fatter nodes,
-# narrower rows), and as the one-boundary reference implementation.
+# MEASURED OUTCOME (4-core / 15 GiB VM, perfbench crawl_extract: 7,000 pages
+# in the natural kind mix, warm session, seeds 1-3, every pass oracle-checked):
+#   packed tokenize + SQL rollup + SQL classify: 3.13-4.82 s per pass,
+#     1,450-2,240 docs/s.  Building its DataFrame alone costs 0.6-0.7 s on
+#     the driver (py4j round trips for the higher-order content-selection
+#     and literal-array keyword folds), against 0.02 s for the fused pass.
+#   this fused pass: 1.67-1.72 s per pass, 4,080-4,180 docs/s (~2x).
+# The older verdict (fused 20-30% slower at 16 cores, where the SQL rollup
+# hid behind the tokenizer in the same pipelined stage) does not hold on a
+# small host: there the plan cost is not hidden and the JVM competes with
+# the Python workers for the same cores.  Inside the kernel, one
+# select_content call plus the control-char gate take the rollup from
+# 0.24 s to 0.05 s per 7,000 pages on one core (tokenizing them: 0.54 s).
 # ---------------------------------------------------------------------------
 
 FUSED_DDL = (
@@ -360,22 +381,32 @@ FUSED_DDL = (
     "receipt_score_centi long, invoice_score_centi long, doc_type string"
 )
 
+_FUSED_SCHEMA = pa.schema(
+    [
+        pa.field("url", pa.string()),
+        pa.field("doc_id", pa.int64()),
+        pa.field("engine", pa.string()),
+        pa.field("text", pa.string()),
+        pa.field("title", pa.string()),
+        pa.field("n_nodes", pa.int32()),
+        pa.field("n_content_nodes", pa.int32()),
+        pa.field("receipt_score_centi", pa.int64()),
+        pa.field("invoice_score_centi", pa.int64()),
+        pa.field("doc_type", pa.string()),
+    ]
+)
+
+# the clean_text gate of operators/blocks._clean_collapsed: node texts are
+# whitespace-collapsed by the tokenizers, so clean_text over the joined
+# content is a no-op unless one of these control chars survived collapse
+_CTRL = re.compile(CTRL_CLASS)
+
 
 def _extract_fused(
     batches: Iterator[pa.RecordBatch], engine: str = "auto"
 ) -> Iterator[pa.RecordBatch]:
-    from ..pycore.blocks import extract_main_text, select_content
-    from ..pycore.classify import classify_doc
-    from ..pycore.htmltok import page_title
-
     for batch in batches:
-        names = batch.schema.names
-        urls = batch.column(names.index("url")).to_pylist()
-        htmls = batch.column(names.index("html")).to_pylist()
-        if "doc_id" in names:
-            doc_ids = batch.column(names.index("doc_id")).to_pylist()
-        else:
-            doc_ids = [None] * len(urls)
+        url_col, doc_col, htmls = _split_pages(batch)
         c_eng: list = []
         c_txt: list = []
         c_ttl: list = []
@@ -387,20 +418,24 @@ def _extract_fused(
         for raw in htmls:
             used, nodes = _run_engine(raw, engine)
             real = [n for n in nodes if n["node_id"] >= 0]
-            text = extract_main_text(real)
+            # pycore.blocks.extract_main_text, with select_content run once
+            keep = set(select_content(real))
+            text = "\n".join([n["text"] for n in real if n["node_id"] in keep])
+            if _CTRL.search(text):
+                text = clean_text(text)
             cls = classify_doc(text)
             c_eng.append(used)
             c_txt.append(text)
             c_ttl.append(page_title(real))
             c_nn.append(len(real))
-            c_ncn.append(len(select_content(real)))
+            c_ncn.append(len(keep))
             c_rs.append(cls["receipt_score_centi"])
             c_is.append(cls["invoice_score_centi"])
             c_dt.append(cls["doc_type"])
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(urls, pa.string()),
-                pa.array(doc_ids, pa.int64()),
+                url_col,
+                doc_col,
                 pa.array(c_eng, pa.string()),
                 pa.array(c_txt, pa.string()),
                 pa.array(c_ttl, pa.string()),
@@ -410,20 +445,7 @@ def _extract_fused(
                 pa.array(c_is, pa.int64()),
                 pa.array(c_dt, pa.string()),
             ],
-            schema=pa.schema(
-                [
-                    pa.field("url", pa.string()),
-                    pa.field("doc_id", pa.int64()),
-                    pa.field("engine", pa.string()),
-                    pa.field("text", pa.string()),
-                    pa.field("title", pa.string()),
-                    pa.field("n_nodes", pa.int32()),
-                    pa.field("n_content_nodes", pa.int32()),
-                    pa.field("receipt_score_centi", pa.int64()),
-                    pa.field("invoice_score_centi", pa.int64()),
-                    pa.field("doc_type", pa.string()),
-                ]
-            ),
+            schema=_FUSED_SCHEMA,
         )
 
 

@@ -255,9 +255,9 @@ def warc_extract(
     payload byte across the Arrow boundary twice (records back to the
     JVM, html back into the tokenizer's Python stage); this fusion
     parses the segment and runs the same pycore tokenize+rollup+classify
-    (`tokenize._extract_fused` — the parity-tested fused rollup) without
+    (`tokenize._extract_fused` — the kernel `extract_pages` runs) without
     the payload ever leaving the Python worker.  Output is byte-identical
-    to `extract_pages(..., rollup='fused')` over the same pages (tested);
+    to `extract_pages` over the same pages (tested);
     `doc_id` is null — WARC records carry no fixture id.
 
     Skew note: granularity is the segment, so parallelism comes from

@@ -1,26 +1,27 @@
 """The flagship extraction pipeline (SURVEY.md §3.4 lifecycle).
 
-    pages --salted repartition--> tokenize (mapInPandas, one Arrow boundary)
-          --> content selection + rollup (window + single hash agg)
-          --> classify (native SQL keyword scoring)
-          --> per-url result row (left join back so empty pages survive)
+    pages --salted repartition--> one mapInArrow pass per batch:
+          tokenize (html / pdf by magic bytes)
+          --> content selection + main text (pycore.blocks)
+          --> title + keyword classify (pycore.htmltok / pycore.classify)
+          --> one result row per url (empty/broken pages keep a row)
 
 Scale design:
 - `salt_repartition` spreads a hot host's pages across partitions by
   xxhash64(url) BEFORE the Python stage (north rule: host-skew defusal).
-- Downstream grouping keys by url — the same key — so AQE/Catalyst keep the
-  exchange count at one for the rollup.
-- The fat `html` column is pruned immediately after tokenize; nothing
-  downstream reads raw bytes.
+  It is the plan's only Exchange.
+- The whole per-document extraction runs inside the single JVM->Python
+  Arrow boundary (`operators.tokenize.extract_fused`): only url/doc_id/html
+  go in and only the final row comes out, so neither the node stream nor
+  the fat `html` column ever reaches a JVM operator, and the driver plans
+  no higher-order content-selection or keyword-scoring expressions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.classify import classify_df
-from ..operators.blocks import extract_text_packed
-from ..operators.tokenize import tokenize_packed
+from ..operators.tokenize import extract_fused
 
 
 def salt_repartition(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -40,12 +41,11 @@ def extract_pages(
     num_partitions: int | None = None,
     engine: str = "auto",
     salt: bool = True,
-    rollup: str = "sql",
 ) -> DataFrame:
     """pages(url, html[, doc_id]) -> one extraction row per url.
 
     Output: url, doc_id, engine, text, title, n_nodes, n_content_nodes,
-    doc_type, receipt_score_centi, invoice_score_centi.
+    receipt_score_centi, invoice_score_centi, doc_type.
     Pages yielding zero nodes (empty/broken) come back with text='' —
     never-raise semantics (ref pipeline.py:251-271).
 
@@ -57,13 +57,4 @@ def extract_pages(
     """
     if salt:
         pages = salt_repartition(pages, num_partitions)
-    if rollup == "fused":
-        # tokenize + content selection + classify in ONE Python pass
-        # (pycore rollup, byte-identical to the SQL form by parity tests);
-        # the node stream never crosses the Arrow boundary
-        from ..operators.tokenize import extract_fused
-
-        return extract_fused(pages, engine=engine)
-    packed = tokenize_packed(pages, engine=engine)  # one row per doc
-    per_url = extract_text_packed(packed)  # per-row exprs, NO shuffle
-    return classify_df(per_url, "text")
+    return extract_fused(pages, engine=engine)

@@ -176,7 +176,10 @@ def fold_alnum_upper(text: str) -> str:
 # Text cleaning — the byte-identity canonicalization (ref normalizer.py:294-319)
 # ---------------------------------------------------------------------------
 
-_CONTROL = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
+# control chars other than \t \n \r; written with \xNN escapes so the same
+# pattern string compiles in Python ``re`` and in Java regex (Spark SQL)
+CTRL_CLASS = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"
+_CONTROL = re.compile(CTRL_CLASS)
 _HSPACE = re.compile(r"[ \t]+")
 _MANY_NL = re.compile(r"\n{3,}")
 _LINE_EDGE = re.compile(r"(?m)^[ \t]+|[ \t]+$")

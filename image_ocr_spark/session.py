@@ -13,14 +13,32 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_mem() -> str:
+    """Driver heap for this host: min(24g, half of physical memory).
+
+    -Xms commits the whole heap at JVM start, so a fixed size that does
+    not fit the host kills the gateway before any job runs; the other
+    half stays with the Python workers and the page cache.
+    SPARK_GRAFT_DRIVER_MEM overrides it."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        total_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return f"{max(1024, min(24 * 1024, total_kb // 2048))}m"
+
+
+DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
+
 ENGINE_CONFS = {
-    # single-JVM local mode: driver heap IS executor heap; host has 128 GiB.
+    # single-JVM local mode: driver heap IS executor heap.
     # -Xms pinned to -Xmx: a growing heap caused multi-pass GC thrash that
     # showed up as 10-20x stage-CPU swings in bench runs.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-    "spark.driver.extraJavaOptions": (
-        "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g") + " -XX:+UseG1GC"
-    ),
+    "spark.driver.memory": DRIVER_MEM,
+    "spark.driver.extraJavaOptions": "-Xms" + DRIVER_MEM + " -XX:+UseG1GC",
     "spark.driver.maxResultSize": "4g",
     # AQE: runtime shuffle coalescing + skew-join splitting (north rule)
     "spark.sql.adaptive.enabled": "true",

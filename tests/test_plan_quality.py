@@ -90,9 +90,10 @@ def test_classifier_stays_codegen(spark):
 
 
 def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path):
-    """The production (packed) pipeline has exactly ONE exchange total —
-    the salted repartition; tokenize + content selection + classify are
-    per-row from there."""
+    """The production pipeline has exactly ONE exchange total — the salted
+    repartition — and runs tokenize + content selection + classify in one
+    Python map-in-Arrow pass, so the plan carries no higher-order
+    content-selection or keyword-scoring expressions."""
     import re
 
     from image_ocr_spark.plans.pipeline import extract_pages
@@ -102,6 +103,8 @@ def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path):
     ops = re.findall(r"^\((\d+)\) (\w+)", plan, re.M)
     assert sum(1 for _, op in ops if op == "Exchange") == 1, ops
     assert not any(op in ("Sort", "Window") for _, op in ops), ops
+    assert [op for _, op in ops if "MapInArrow" in op] == ["MapInArrow"], ops
+    assert not re.search(r"\b(aggregate|transform)\(", plan), plan
 
 
 def test_minhash_signatures_no_shuffle(spark, documents):
