@@ -51,6 +51,21 @@ def pages_path(replicas: int = REPLICAS) -> str:
     return os.path.join(CACHE_ROOT, f"pages_{_sf_tag()}_{CORPUS_REV}_x{replicas}")
 
 
+def _stop_prep_session(spark) -> None:
+    """Stop a corpus-prep session AND its gateway JVM.  A stopped session
+    keeps its JVM and committed -Xms heap alive in this coordinator, and
+    on a small host that heap plus both pinned workers' does not fit."""
+    from pyspark import SparkContext
+
+    spark.stop()
+    gw = SparkContext._gateway
+    if gw is not None:
+        gw.shutdown()
+        gw.proc.stdin.close()
+        gw.proc.wait(60)
+        SparkContext._gateway = SparkContext._jvm = None
+
+
 def prepare_pages(replicas: int = REPLICAS) -> dict:
     """Synthesize + persist the page corpus once (outside timed runs),
     mirroring the real deployment where pages already sit in a table."""
@@ -74,11 +89,21 @@ def prepare_pages(replicas: int = REPLICAS) -> dict:
             )
             .first()
         )
-        spark.stop()
+        _stop_prep_session(spark)
         with open(meta_path, "w") as fh:
             json.dump({"docs": stats["docs"], "bytes": int(stats["bytes"])}, fh)
     with open(meta_path) as fh:
         return json.load(fh)
+
+
+def _worker_heap_conf() -> dict:
+    """Pinned heap of one worker JVM: min(12g, a quarter of physical
+    memory), so the lo and hi workers fit the host side by side."""
+    from image_ocr_spark.session import mem_total_mib
+
+    mem = f"{max(1024, min(12 * 1024, mem_total_mib() // 4))}m"
+    return {"spark.driver.memory": mem,
+            "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+UseG1GC"}
 
 
 def worker(threads: int, path: str, skew: bool = False) -> None:
@@ -94,8 +119,7 @@ def worker(threads: int, path: str, skew: bool = False) -> None:
     from image_ocr_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    extra = {"spark.driver.memory": "12g",
-             "spark.driver.extraJavaOptions": "-Xms12g -XX:+UseG1GC"}
+    extra = _worker_heap_conf()
     if skew:
         extra["spark.sql.files.maxPartitionBytes"] = "4294967296"
     spark = get_spark(
@@ -145,8 +169,7 @@ def pairs_worker(threads: int, sf_dir: str) -> None:
     from image_ocr_spark.operators.dedup import minhash_lsh_pairs, with_variants
     from image_ocr_spark.session import get_spark
 
-    extra = {"spark.driver.memory": "12g",
-             "spark.driver.extraJavaOptions": "-Xms12g -XX:+UseG1GC"}
+    extra = _worker_heap_conf()
     spark = get_spark(
         f"local[{threads}]",
         app_name=f"bench-pairs-{threads}",
@@ -213,7 +236,7 @@ def prepare_warc_chunks() -> dict:
             )
             .first()
         )
-        spark.stop()
+        _stop_prep_session(spark)
         with open(meta_path, "w") as fh:
             json.dump({"records": int(stats["records"]),
                        "gz_bytes": int(stats["gz_bytes"]),
@@ -232,8 +255,7 @@ def warc_worker(threads: int, path: str) -> None:
     from image_ocr_spark.operators.warcsource import read_warc
     from image_ocr_spark.session import get_spark
 
-    extra = {"spark.driver.memory": "12g",
-             "spark.driver.extraJavaOptions": "-Xms12g -XX:+UseG1GC"}
+    extra = _worker_heap_conf()
     spark = get_spark(
         f"local[{threads}]",
         app_name=f"bench-warc-{threads}",
@@ -386,8 +408,7 @@ def frontier_worker(threads: int, path: str) -> None:
     )
     from image_ocr_spark.session import get_spark
 
-    extra = {"spark.driver.memory": "12g",
-             "spark.driver.extraJavaOptions": "-Xms12g -XX:+UseG1GC"}
+    extra = _worker_heap_conf()
     spark = get_spark(
         f"local[{threads}]",
         app_name=f"bench-frontier-{threads}",
@@ -584,7 +605,7 @@ def prepare_skewed_pages(replicas: int) -> tuple:
             F.count(F.lit(1)).alias("docs"),
             F.sum(F.octet_length("html")).alias("bytes"),
         ).first()
-        spark.stop()
+        _stop_prep_session(spark)
         with open(path + ".meta.json", "w") as fh:
             json.dump({"docs": stats["docs"], "bytes": int(stats["bytes"])}, fh)
     with open(path + ".meta.json") as fh:

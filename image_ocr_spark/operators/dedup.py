@@ -40,6 +40,7 @@ from typing import List
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 # 32-bit token/shingle hash, identical in Spark and DuckDB:
 #   Spark : conv(substring(md5(s), 1, 8), 16, 10)::long
@@ -236,12 +237,18 @@ def minhash_lsh_pairs(
     # one side and re-evaluate the signature pipeline on both (see
     # simhash_hamming_pairs); the band-key shuffle is the scale path anyway
     if max_bucket is not None:
-        # one agg on the SAME (band, key) the join shuffles on, so the
-        # stats ride the shuffle the join needed anyway
-        stats = banded.groupBy("band", "key").agg(
-            F.count(F.lit(1)).alias("_n"), F.min("id").alias("_hub")
+        # bucket stats as a window over the SAME (band, key) the join
+        # shuffles on: both branches below read one exchange, so the
+        # signature UDF runs once (a groupBy + join back re-planned it
+        # per branch: three evaluations per call).  Keys are never null;
+        # the explicit filter matches the one the clique join infers and
+        # pushes below its window, so both branches plan equal exchanges
+        bucket = Window.partitionBy("band", "key")
+        banded = banded.filter(F.col("key").isNotNull()).select(
+            "*",
+            F.count(F.lit(1)).over(bucket).alias("_n"),
+            F.min("id").over(bucket).alias("_hub"),
         )
-        banded = banded.join(stats, ["band", "key"])
         small = banded.filter(F.col("_n") <= max_bucket)
         a = small.alias("a")
         b = small.alias("b")

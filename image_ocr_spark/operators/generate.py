@@ -68,9 +68,11 @@ def generate_pages(documents: DataFrame, replicas: int = 1) -> DataFrame:
     # after it — tokenize, warc serialization — since map stages fuse)
     # into a single task.  The exchange moves only (doc_id, text, lang);
     # hash on doc_id keeps the assignment deterministic under retries and
-    # defaultParallelism keeps it scale-adaptive.
+    # defaultParallelism keeps it scale-adaptive.  Like
+    # __spark_entry__._docs, it spreads only an input with fewer splits
+    # than that: an already-spread input keeps its plan Exchange-free.
     par = documents.sparkSession.sparkContext.defaultParallelism
-    pages = src.repartition(par, F.col("doc_id")).mapInPandas(
-        _gen(replicas), GEN_PAGE_SCHEMA
-    )
+    if src.rdd.getNumPartitions() < par:
+        src = src.repartition(par, F.col("doc_id"))
+    pages = src.mapInPandas(_gen(replicas), GEN_PAGE_SCHEMA)
     return pages.withColumn("warc_ts", F.timestamp_seconds("warc_ts"))

@@ -327,9 +327,10 @@ def allocate_crawl_budget(
     # quotient's ulp reaches the 1/total fraction grid and a truncate
     # could disagree with exact floor-div between engines.  try_multiply
     # (r07, ADVICE): at int64-edge rank scales a dominant host's
-    # rank * total_budget would overflow and raise under ANSI — NULL
-    # coalesces to the min_per_host floor instead, consistent with the
-    # try_add/try_multiply hardening in schedule_frontier/recrawl_due
+    # rank * total_budget would overflow and raise under ANSI.  The NULL
+    # saturates at the share's upper bound, total_budget (rank <= sum),
+    # rather than flooring the dominant host at min_per_host — consistent
+    # with the try_add/try_multiply hardening in schedule_frontier/recrawl_due
     share = F.expr(
         f"try_multiply(cast({total_budget} as bigint), {rank_col}) div {int(total)}"
     )
@@ -337,7 +338,7 @@ def allocate_crawl_budget(
         "host",
         F.greatest(
             F.lit(min_per_host).cast("long"),
-            F.coalesce(share, F.lit(min_per_host).cast("long")),
+            F.coalesce(share, F.lit(total_budget).cast("long")),
         ).alias("budget"),
     )
 

@@ -2,16 +2,46 @@
 
 Tuned for the job shape (SURVEY.md §4): one Arrow boundary (the tokenizer),
 hash aggregations, broadcast dictionary joins, AQE everywhere.  On a real
-cluster the same config ships via spark-submit --conf; nothing here is
-local-mode-specific except the master default.
+cluster the same config ships via spark-submit --conf.
+
+Local masters also get ``spark.python.daemon.module =
+image_ocr_spark.workerd``, which imports pyspark from the interpreter's
+site-packages (the driver's copy) instead of the archives Spark puts first
+on every Python worker's path (``pyspark.zip``, the py4j zip, the
+spark-core jar).  Each task's ``importlib.invalidate_caches()`` makes
+Python 3.11 re-read the whole central directory of every archive a worker
+holds an importer for: 0.11-0.15 s per task measured on a 4-core VM,
+against <1 ms for an identity ``mapInArrow`` body.  The cost repeats per
+task wave: an identity ``mapInArrow`` over ``range(4000)`` took 0.36 / 1.15 s
+at 1 / 16 partitions with the stock daemon and 0.25 / 0.48 s with
+``workerd`` (medians of 6 warm passes each).  In local mode driver and
+workers share the interpreter and filesystem; a cluster keeps the stock
+daemon, since this package, shipped there with ``--py-files``, is not
+importable when the daemon starts.  Locally, too, the module is chosen
+only if a worker can import this package (from the driver's cwd,
+``PYTHONPATH`` or site-packages).
 """
 
 from __future__ import annotations
 
 import os
+import site
 import tempfile
+from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
+
+
+def mem_total_mib() -> int:
+    """Physical memory of this host in MiB (MemTotal of /proc/meminfo)."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        total_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return total_kb // 1024
 
 
 def default_driver_mem() -> str:
@@ -21,14 +51,7 @@ def default_driver_mem() -> str:
     not fit the host kills the gateway before any job runs; the other
     half stays with the Python workers and the page cache.
     SPARK_GRAFT_DRIVER_MEM overrides it."""
-    try:
-        with open("/proc/meminfo") as f:
-            total_kb = next(
-                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
-            )
-    except (OSError, StopIteration, ValueError):
-        total_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
-    return f"{max(1024, min(24 * 1024, total_kb // 2048))}m"
+    return f"{max(1024, min(24 * 1024, mem_total_mib() // 2))}m"
 
 
 DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
@@ -62,6 +85,15 @@ ENGINE_CONFS = {
 }
 
 
+def _worker_finds_package() -> bool:
+    """True when a local worker can import this package: the daemon runs
+    with the driver's cwd first on its path, then ``PYTHONPATH`` and the
+    interpreter's site-packages."""
+    path = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    path += site.getsitepackages()
+    return PathFinder.find_spec("image_ocr_spark", path) is not None
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "image_ocr_spark",
@@ -76,6 +108,11 @@ def get_spark(
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    local = master == "local" or master.startswith("local[")
+    if local and _worker_finds_package():
+        builder = builder.config(
+            "spark.python.daemon.module", "image_ocr_spark.workerd"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

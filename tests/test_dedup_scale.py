@@ -290,6 +290,27 @@ def test_lsh_hot_bucket_star_edges_preserve_components(spark):
     star.unpersist()
 
 
+def test_lsh_max_bucket_evaluates_signatures_once(spark):
+    """With max_bucket the clique and star branches read one (band, key)
+    exchange, so the executed (AQE final) plan runs the Arrow signature
+    pass once; reusing that exchange is fine, re-planning the UDF per
+    branch (the old stats groupBy + join back: three passes) is not."""
+    from image_ocr_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.range(120).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") < 40, F.lit("hot template boilerplate page body"))
+        .otherwise(F.concat(F.lit("unique text "), F.col("id").cast("string")))
+        .alias("text"),
+    )
+    pairs = minhash_lsh_pairs(docs, max_bucket=16)
+    rows = pairs.collect()
+    assert any(r.id_a == 0 for r in rows) and len(rows) < 40 * 39 // 2
+    adaptive = pairs._jdf.queryExecution().executedPlan()
+    assert adaptive.isFinalPlan()
+    assert adaptive.executedPlan().toString().count("MapInArrow") == 1
+
+
 def test_dedup_lines_scrubs_boilerplate_keeps_order(spark):
     """Corpus-level line dedup: lines in >max_df docs vanish from ALL docs,
     unique lines survive in original order, all-boilerplate docs come back

@@ -177,6 +177,22 @@ def test_schedule_frontier_matches_duckdb(spark):
     assert all(t == 1_000_000 for _, _, t in by_host["h2"])
 
 
+def test_budget_overflow_saturates_at_total_budget(spark):
+    """At an int64-edge rank, total_budget * rank overflows: the dominant
+    host's share saturates at total_budget instead of collapsing to the
+    min_per_host floor (the exact share here is 999)."""
+    from image_ocr_spark.operators.robotsfrontier import allocate_crawl_budget
+
+    hosts = spark.createDataFrame(
+        [("mega", 2**62), ("small", 1)], "host string, rank long"
+    )
+    budgets = allocate_crawl_budget(hosts, total_budget=1000, min_per_host=1)
+    assert {r.host: r.budget for r in budgets.collect()} == {
+        "mega": 1000,
+        "small": 1,
+    }
+
+
 def test_budget_allocation_and_capped_schedule(spark):
     """Crawl budget proportional to host_rank micro-ranks (integer div,
     floored at min_per_host), then the budget-capped schedule — the

@@ -186,22 +186,41 @@ def test_spark_egress_deterministic(spark, documents):
     assert len(a) == 1 and a[0].chunk == b[0].chunk
 
 
+def _spread_docs(spark, documents, n):
+    """The first ``n`` documents as an input that already has
+    defaultParallelism splits (the corpus-scale shape), so
+    generate_pages spreads nothing and adds no Exchange."""
+    rows = documents.filter(F.col("doc_id") < n).collect()
+    par = spark.sparkContext.defaultParallelism
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, par), documents.schema
+    )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_generate_pages_spreads_only_narrow_input(spark, documents):
+    """The fixture generator's id-spread Exchange appears only when its
+    input has fewer splits than defaultParallelism (one parquet file)."""
+    from image_ocr_spark.operators.generate import generate_pages
+
+    narrow = documents.filter(F.col("doc_id") < 50)
+    assert narrow.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    assert _plan(generate_pages(narrow)).count("Exchange") == 1
+    assert "Exchange" not in _plan(generate_pages(_spread_docs(spark, documents, 50)))
+
+
 def test_read_warc_plan_is_scan_stage_only(spark, documents):
-    """Ingest is mapInArrow over the chunk scan: read_warc adds NO
-    Exchange beyond its input's (the 100 TB shape: one task per
-    segment).  Since r07 the fixture generator itself carries one
-    id-spread Exchange (generate.py), so the assertion compares the
-    parse plan's Exchange count against the chunk input's rather than
-    demanding zero in the whole lineage."""
+    """Ingest is mapInArrow over the chunk scan: no Exchange anywhere in
+    the physical plan (the 100 TB shape: one task per segment)."""
     from image_ocr_spark.operators.generate import generate_pages
     from image_ocr_spark.operators.warcsource import pages_to_warc, read_warc
 
-    pages = generate_pages(documents.filter(F.col("doc_id") < 50))
-    chunks = pages_to_warc(pages)
-    n_in = chunks._jdf.queryExecution().executedPlan().toString().count("Exchange")
-    df = read_warc(chunks)
-    explained = df._jdf.queryExecution().executedPlan().toString()
-    assert explained.count("Exchange") == n_in
+    pages = generate_pages(_spread_docs(spark, documents, 50))
+    df = read_warc(pages_to_warc(pages))
+    assert "Exchange" not in _plan(df)
 
 
 def test_stream_warc_chunks_equals_batch(spark, documents, tmp_path):
@@ -307,19 +326,10 @@ def test_warc_extract_fused_matches_composed(spark, documents):
     from image_ocr_spark.operators.warcsource import pages_to_warc, warc_extract
     from image_ocr_spark.plans.pipeline import extract_pages
 
-    pages = generate_pages(documents.filter(F.col("doc_id") < 200)).persist()
+    pages = generate_pages(_spread_docs(spark, documents, 200)).persist()
     try:
-        chunks = pages_to_warc(pages, max_chunk_bytes=32 << 10)
-        n_in = (
-            chunks._jdf.queryExecution().executedPlan().toString().count("Exchange")
-        )
-        fused = warc_extract(chunks)
-        # the fusion itself adds no Exchange (r07: the fixture generator
-        # upstream carries one id-spread Exchange — compare, not zero)
-        assert (
-            fused._jdf.queryExecution().executedPlan().toString().count("Exchange")
-            == n_in
-        )
+        fused = warc_extract(pages_to_warc(pages, max_chunk_bytes=32 << 10))
+        assert "Exchange" not in _plan(fused)
         got = {r.url: (r.text, r.title, r.doc_type, r.engine, r.n_nodes)
                for r in fused.collect()}
         want = {r.url: (r.text, r.title, r.doc_type, r.engine, r.n_nodes)
